@@ -1,4 +1,4 @@
-"""The CDC apply loop: change chunks -> LWW dedup -> bucket-pruned MERGE.
+"""The CDC apply loop: change chunks -> LWW dedup -> merge-on-read delta append.
 
 Per replay chunk (SURVEY.md §7.0, restating the reference's
 fetch/validate/stage/commit lifecycle ``FAIMMS/REALTIME/faimms.py:123-229``
@@ -9,13 +9,15 @@ as one declarative plan):
 2. validation gates -> quarantine branch (``faimms.py:199-207``);
 3. LWW dedup to one row per ``(conv_id, turn_idx)`` (map-side-combining
    aggregate; explicit salting available for pathological hot keys);
-4. MERGE: union the deduped winners with the *current rows of only the
-   affected buckets*, re-run LWW against the stored ``(ts, lsn)`` of each
-   target row, drop delete-winners, rewrite those buckets copy-on-write.
-   Unaffected buckets carry forward as metadata. Because the target keeps
-   each row's writer ``(ts, lsn)``, re-applying any already-committed chunk
-   (or any overlap) is a physical no-op on row content — at-least-once
-   delivery + idempotent apply = exactly-once effect;
+4. merge-on-read delta append: the winners — delete tombstones included —
+   are written, clustered by bucket, as one new delta layer of only the
+   affected buckets (Iceberg v2 equality-delete design); unaffected
+   buckets carry forward as metadata. Reads and compaction resolve LWW
+   across layers by each row's stored writer ``(ts, lsn)``, so
+   re-applying any already-committed chunk (or any overlap) is a no-op on
+   resolved content — at-least-once delivery + idempotent apply =
+   exactly-once effect. Copy-on-write (``mode='cow'``) is this same append
+   followed by compaction of the affected buckets;
 5. one atomic snapshot commit whose summary carries the new offsets
    (``last_lsn``, per-bucket watermarks) — checkpoint and data are the same
    commit, the invariant the reference approximates by saving channel info
@@ -29,29 +31,31 @@ is <= the committed LSN is skipped outright.
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
-_PHASE_TIMING = os.environ.get("DSS_PHASE_TIMING") == "1"
-
-
-def _phase(label: str, t0: float) -> float:
-    """Optional stderr phase-timing (DSS_PHASE_TIMING=1) for bench tuning."""
-    t1 = time.monotonic()
-    if _PHASE_TIMING:
-        print(f"[phase] {label}: {t1 - t0:.3f}s", file=sys.stderr)
-    return t1
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..lake.table import LakeTable
 from .dedup import lww_dedup
 from .planner import plan_replay, plan_replay_bounds
-from .schemas import KEY_COLS, LINEAGE_SCHEMA, ORDER_COLS, TRANSCRIPTS_SCHEMA
+from .schemas import (
+    CHANGES_SCHEMA,
+    KEY_COLS,
+    LINEAGE_SCHEMA,
+    METRICS_SCHEMA,
+    ORDER_COLS,
+    TRANSCRIPTS_SCHEMA,
+)
+
+# footer stats of a bucket that wrote nothing (an abandoned WAP batch's
+# single lineage row)
+_NO_FILES = {"n_rows": 0, "n_deletes": 0, "min_lsn": None, "max_lsn": None,
+             "min_ts": None, "max_ts": None}
 
 
 @dataclass
@@ -84,13 +88,17 @@ class CdcApplier:
         compact_threshold: int | None = 16,
         validator=None,
     ):
-        """``mode='mor'`` (default) appends each chunk's deduped winners as a
-        merge-on-read delta layer — per chunk the table gains O(changed keys)
-        bytes, the at-scale write path (Iceberg v2 equality deletes; how
-        Flink's Iceberg upsert sink works). ``mode='cow'`` rewrites affected
-        buckets copy-on-write — read-optimised, O(bucket size) per chunk.
-        ``compact_threshold`` bounds MOR read amplification: replay compacts
-        any bucket whose delta layer count reaches it."""
+        """Every chunk applies through ONE path: its deduped winners append
+        as a merge-on-read delta layer — per chunk the table gains
+        O(changed keys) bytes, the at-scale write path (Iceberg v2 equality
+        deletes; how Flink's Iceberg upsert sink works). ``mode='mor'``
+        (default) stops there. ``mode='cow'`` then compacts the chunk's
+        affected buckets, so every commit leaves them without delta layers
+        — read-optimised, O(bucket size) per chunk. ``compact_threshold``
+        bounds MOR read amplification: replay compacts any bucket whose
+        delta layer count reaches it."""
+        if mode not in ("mor", "cow"):
+            raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
         self.spark = spark
         self.target = target
         self.lineage = lineage
@@ -260,7 +268,7 @@ class CdcApplier:
         target_props: dict[str, Any] | None = None,
         **kwargs: Any,
     ) -> "CdcApplier":
-        """Create the target/lineage/quarantine tables under ``root``.
+        """Create the target/lineage/quarantine/metrics tables under ``root``.
         ``target_props`` merges extra table properties into the target
         (e.g. ``stats_cols`` to enable manifest-level data skipping)."""
         target = LakeTable.create(
@@ -268,26 +276,33 @@ class CdcApplier:
             props={"merge_keys": KEY_COLS, "order_cols": ORDER_COLS,
                    **(target_props or {})},
         )
+        return cls(
+            spark, target, *cls._create_side_tables(spark, root, CHANGES_SCHEMA.fields),
+            **kwargs,
+        )
+
+    @staticmethod
+    def _create_side_tables(
+        spark: SparkSession, root: str, event_fields: list[T.StructField]
+    ) -> tuple[LakeTable, LakeTable, LakeTable]:
+        """The lineage, quarantine and metrics tables under ``root``. A
+        quarantine row is a rejected event (``event_fields``) plus its
+        ``reason`` and ``batch_id``."""
         lineage = LakeTable.create(
             spark, f"{root}/lineage", LINEAGE_SCHEMA, ["source_partition"], 4
         )
-        from .schemas import CHANGES_SCHEMA
-        from pyspark.sql import types as T
-
         q_schema = T.StructType(
-            CHANGES_SCHEMA.fields
+            list(event_fields)
             + [
                 T.StructField("reason", T.StringType(), True),
                 T.StructField("batch_id", T.LongType(), True),
             ]
         )
         quarantine = LakeTable.create(spark, f"{root}/quarantine", q_schema, ["lsn"], 4)
-        from .schemas import METRICS_SCHEMA
-
         metrics = LakeTable.create(
             spark, f"{root}/metrics", METRICS_SCHEMA, ["batch_id"], 1
         )
-        return cls(spark, target, lineage, quarantine, metrics, **kwargs)
+        return lineage, quarantine, metrics
 
     @classmethod
     def bootstrap_custom(
@@ -309,8 +324,6 @@ class CdcApplier:
         event time + LSN tiebreak, which also makes replay idempotent).
         ``target_props`` merges extra table properties into the target
         (e.g. ``merge_engine='aggregation'`` + ``agg_functions``)."""
-        from pyspark.sql import types as T
-
         order_cols = list(order_cols or ORDER_COLS)
         names = {f.name for f in schema.fields}
         missing = [c for c in list(merge_keys) + order_cols if c not in names]
@@ -321,25 +334,13 @@ class CdcApplier:
             props={"merge_keys": list(merge_keys), "order_cols": order_cols,
                    **(target_props or {})},
         )
-        lineage = LakeTable.create(
-            spark, f"{root}/lineage", LINEAGE_SCHEMA, ["source_partition"], 4
-        )
-        q_fields = list(schema.fields)
+        event_fields = list(schema.fields)
         if "op" not in names:
-            q_fields.append(T.StructField("op", T.StringType(), True))
-        q_fields += [
-            T.StructField("reason", T.StringType(), True),
-            T.StructField("batch_id", T.LongType(), True),
-        ]
-        quarantine = LakeTable.create(
-            spark, f"{root}/quarantine", T.StructType(q_fields), ["lsn"], 4
+            event_fields.append(T.StructField("op", T.StringType(), True))
+        return cls(
+            spark, target, *cls._create_side_tables(spark, root, event_fields),
+            **kwargs,
         )
-        from .schemas import METRICS_SCHEMA
-
-        metrics = LakeTable.create(
-            spark, f"{root}/metrics", METRICS_SCHEMA, ["batch_id"], 1
-        )
-        return cls(spark, target, lineage, quarantine, metrics, **kwargs)
 
     @classmethod
     def load(
@@ -363,6 +364,16 @@ class CdcApplier:
         off = self.target.snapshot().summary.get("offsets")
         return None if off is None else off.get("last_lsn")
 
+    @staticmethod
+    def _already_committed(snap: Any, hi: int | None, epoch: int | None) -> bool:
+        """The exactly-once skip rule, checked against one snapshot:
+        LSN-ranged chunks skip when hi <= committed LSN; epochs skip when
+        epoch <= committed epoch (foreachBatch redelivery)."""
+        if epoch is not None:
+            return epoch <= snap.summary.get("epoch", -1)
+        committed = (snap.summary.get("offsets") or {}).get("last_lsn")
+        return committed is not None and hi is not None and hi <= committed
+
     # ----------------------------------------------------------------- apply
     def apply_chunk(
         self,
@@ -375,59 +386,32 @@ class CdcApplier:
     ) -> ChunkStats:
         """Apply one chunk. Batch replay passes an LSN range (lo, hi];
         streaming passes ``epoch`` (micro-batch id) instead and ``hi=None``
-        (derived from the batch's own max LSN). Skip rules give exactly-once:
-        LSN-ranged chunks skip when hi <= committed LSN; epochs skip when
-        epoch <= committed epoch (foreachBatch redelivery)."""
+        (derived from the batch's own max LSN). A chunk the last snapshot
+        already covers is skipped (see ``_already_committed``).
+
+        The chunk is scanned once (``_write_chunk``); per-bucket lineage
+        stats come from the footers of the just-written — still
+        uncommitted — delta files. The commit then publishes files +
+        offsets atomically (two-phase: write_delta_files -> commit_delta),
+        so a crash between the phases leaves only an orphaned,
+        never-referenced data dir. ``mode='cow'`` compacts the affected
+        buckets after that commit; a crash in between leaves a correct
+        merge-on-read table with its offsets committed, whose leftover
+        layers the next compaction folds."""
         t0 = time.monotonic()
         stats = ChunkStats(batch_id=batch_id, lo=lo, hi=hi if hi is not None else -1)
-
-        if epoch is not None:
-            if epoch <= self.target.snapshot().summary.get("epoch", -1):
-                stats.skipped = True  # redelivered micro-batch -> no-op
-                return stats
-        else:
-            committed = self.committed_lsn()
-            if committed is not None and hi is not None and hi <= committed:
-                stats.skipped = True  # duplicate chunk replay -> no-op
-                return stats
-
         snap = self.target.snapshot()
-        if self.mode == "mor":
-            return self._apply_chunk_mor(
-                chunk, hi, batch_id, epoch, defer_lineage, snap, stats, t0
-            )
-        bucket_col = self.target.bucket_col()
-        ok = self._reason(chunk).isNull()
-        # ONE slim aggregate pass gives per-bucket metrics, quarantine
-        # counts AND the affected-bucket list (collect is <= bucket_count + 1
-        # rows, never data-sized). It reads only the five narrow columns
-        # (keys/op/lsn/ts) — parquet column pruning keeps it ~10% of the
-        # chunk's bytes, which measured CHEAPER than fusing it into the
-        # payload-wide winners aggregation and persisting that (the persist
-        # serializes full text payloads and cost more than this pass saves).
-        # Invalid rows group under their bucket too (hash of a NULL key is
-        # defined), so lineage attributes them.
-        valid, _ = self._split(chunk)
-        per_bucket = (
-            chunk.withColumn("_ok", ok)
-            .withColumn("_b", bucket_col)
-            .groupBy("_b")
-            .agg(
-                F.sum(F.col("_ok").cast("long")).alias("n_events"),
-                F.sum((F.col("_ok") & (F.col("op") != "D")).cast("long")).alias("n_upserts"),
-                F.sum((F.col("_ok") & (F.col("op") == "D")).cast("long")).alias("n_deletes"),
-                F.sum((~F.col("_ok")).cast("long")).alias("n_quarantined"),
-                F.min(F.when(F.col("_ok"), F.col("lsn"))).alias("min_lsn"),
-                F.max(F.when(F.col("_ok"), F.col("lsn"))).alias("max_lsn"),
-                F.min(F.when(F.col("_ok"), F.col("ts"))).alias("min_ts"),
-                F.max(F.when(F.col("_ok"), F.col("ts"))).alias("max_ts"),
-            )
-            .collect()
-        )
-        tp = _phase("metrics_agg", t0)
-        stats.n_quarantined = sum(r["n_quarantined"] for r in per_bucket)
-        per_bucket = [r for r in per_bucket if r["n_events"] > 0]
-        if not per_bucket:
+        if self._already_committed(snap, hi, epoch):
+            stats.skipped = True  # duplicate chunk / redelivered micro-batch
+            return stats
+
+        schema, new_files, m = self._write_chunk(chunk, snap)
+        stats.n_events = int(m["n_events"] or 0)
+        stats.n_upserts = int(m["n_upserts"] or 0)
+        stats.n_deletes = int(m["n_deletes"] or 0)
+        stats.n_quarantined = int(m["n_quarantined"] or 0)
+
+        if not new_files:
             # nothing valid in the chunk — still advance the offset so the
             # chunk is never replayed (metadata-only commit)
             if stats.n_quarantined:
@@ -439,144 +423,69 @@ class CdcApplier:
             stats.duration_ms = int((time.monotonic() - t0) * 1000)
             return stats
 
-        affected = sorted(int(r["_b"]) for r in per_bucket)
+        affected = sorted(int(b) for b in new_files)
         stats.affected_buckets = affected
-        stats.n_events = sum(r["n_events"] for r in per_bucket)
-        stats.n_upserts = sum(r["n_upserts"] for r in per_bucket)
-        stats.n_deletes = sum(r["n_deletes"] for r in per_bucket)
-
         if hi is None:  # streaming: offsets derived from the batch itself
-            hi = max(int(r["max_lsn"]) for r in per_bucket)
+            hi = int(m["max_lsn"])
             stats.hi = hi
-        # keyed off each row's own bucket id — collect() order is arbitrary,
-        # so zipping against the sorted bucket list would misattribute stats
-        per_part = {str(int(r["_b"])): int(r["max_lsn"]) for r in per_bucket}
-        summary = self._summary(snap, hi, batch_id, per_part, epoch)
-        existing = [f.name for f in snap.schema.fields]
 
-        # LWW winners of this chunk, one row per key, still carrying op
-        # ('D' winners are delete tombstones). max_by plans as a partial
-        # aggregation — duplicate deliveries collapse map-side, before the
-        # shuffle.
-        winners = lww_dedup(
-            valid,
-            keys=self.keys,
-            order=self.order,
-            method=self.dedup_method,
-            salt_buckets=self.salt_buckets,
+        # per-bucket stats from parquet footers (driver-side, ~1 ms/file —
+        # no Spark job, no scan): row counts, exact lsn/ts min/max, and the
+        # delete count via the _del null-count trick
+        per_bucket = self.target.file_stats(new_files)
+        summary = self._summary(
+            snap, hi, batch_id, self._partition_watermarks(per_bucket, hi), epoch
         )
 
-        # --- copy-on-write merge: union the chunk's winners with the
-        # affected target rows and run ONE LWW aggregation over both.
-        # Two exchanges per chunk: hash(conv_id, turn_idx) for the
-        # aggregate, then hash(bucket) to cluster the write.
-        # Existing rows come back WITH their tombstones (keep_tombstones):
-        # a delete that already won must keep guarding its key against
-        # stale pre-delete events in this and every later chunk, so 'D'
-        # winners are written back to the base (filtered at read; GC'd
-        # only by the explicit expire_tombstones horizon).
-        current = self.target.read(
-            buckets=affected, keep_tombstones=True
-        ).withColumn("op", F.coalesce(F.col("op"), F.lit("K")))
-        united = current.unionByName(winners, allowMissingColumns=True)
-        resolved = lww_dedup(
-            united,
-            keys=self.keys,
-            order=self.order,
-            method=self.dedup_method,
-            salt_buckets=self.salt_buckets,
-        )
-        merged = resolved.withColumn(
-            "op",
-            F.when(F.col("op") == "D", F.lit("D")).otherwise(
-                F.lit(None).cast("string")
-            ),
-        )
-
-        # column order: existing schema first, additive columns appended,
-        # the reserved tombstone marker last (kept in data files only)
-        new_cols = [c for c in merged.columns if c not in existing and c != "op"]
-        merged = merged.select(*existing, *new_cols, "op")
-
-        # Quarantine is written BEFORE the offset-advancing commit (same
-        # ordering as _apply_chunk_mor): a crash between the two re-applies
-        # the chunk (idempotent) instead of silently losing the rejected
-        # rows — the reverse order would skip the chunk on replay and the
-        # quarantined events would be gone.
+        # Quarantine is written BEFORE the offset-advancing commit: a crash
+        # between the two re-applies the chunk (idempotent) instead of
+        # silently losing the rejected rows (the reverse order would skip
+        # the chunk on replay and the quarantined events would be gone).
         if stats.n_quarantined:
             self._write_quarantine(self._split(chunk)[1], batch_id)
-            tp = _phase("quarantine", tp)
 
-        new_snap = self.target.replace_buckets(
-            merged,
-            affected,
-            summary=summary,
-            sort_cols=self.keys,
-            expected_parent=snap.snapshot_id,
-            props_update=(
-                {"base_tombstones": True}
-                if stats.n_deletes or snap.props.get("base_tombstones")
-                else None
-            ),
+        new_snap = self.target.commit_delta(
+            new_files, schema, summary, expected_parent=snap.snapshot_id
         )
+        if self.mode == "cow":
+            new_snap = self.target.compact(buckets=affected)
         stats.snapshot_id = new_snap.snapshot_id
-        tp = _phase("merge_write", tp)
         stats.duration_ms = int((time.monotonic() - t0) * 1000)
 
-        if self.with_lineage and self.lineage is not None:
-            rows = [
+        self._record_lineage(
+            self._lineage_rows(
+                batch_id, per_bucket, "ok", stats.n_quarantined, stats.duration_ms
+            ),
+            defer=defer_lineage,
+        )
+        if self.metrics is not None:
+            self._metrics_buf.append(
                 {
                     "batch_id": batch_id,
-                    "source_partition": int(r["_b"]),
-                    "n_events": r["n_events"],
-                    "n_upserts": r["n_upserts"],
-                    "n_deletes": r["n_deletes"],
-                    "n_quarantined": r["n_quarantined"],
-                    "min_lsn": r["min_lsn"],
-                    "max_lsn": r["max_lsn"],
-                    "min_ts": r["min_ts"],
-                    "max_ts": r["max_ts"],
-                    "status": "ok",
-                    "duration_ms": stats.duration_ms if i == 0 else 0,
+                    "epoch": epoch,
+                    "hi_lsn": hi,
+                    "n_events": stats.n_events,
+                    "n_upserts": stats.n_upserts,
+                    "n_deletes": stats.n_deletes,
+                    "n_quarantined": stats.n_quarantined,
+                    "n_winner_rows": sum(st["n_rows"] for st in per_bucket.values()),
+                    "n_affected_buckets": len(affected),
+                    "duration_ms": stats.duration_ms,
                 }
-                for i, r in enumerate(per_bucket)
-            ]
-            if defer_lineage:
-                # replay batches many chunks' rows into ONE lineage commit —
-                # a per-chunk Spark job over a handful of rows is pure fixed
-                # overhead (it scales with chunk count, not data)
-                self._lineage_buf.extend(rows)
-            else:
-                self.lineage.append(
-                    self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                    summary={"batch_id": batch_id},
-                )
-            _phase("lineage", tp)
+            )
+            if not defer_lineage:
+                self.flush_metrics()
         return stats
 
-    # ------------------------------------------------------- MOR fused path
-    def _apply_chunk_mor(
-        self,
-        chunk: DataFrame,
-        hi: int | None,
-        batch_id: int,
-        epoch: int | None,
-        defer_lineage: bool,
-        snap: Any,
-        stats: ChunkStats,
-        t0: float,
-    ) -> ChunkStats:
-        """Merge-on-read apply with a FUSED metrics pass: the chunk is
-        scanned exactly once. Validation counters and the offset watermark
-        ride the winners-write job as an ``Observation`` (zero extra scan,
-        zero extra job); per-bucket lineage stats come from a narrow
-        read-back of the just-written — still uncommitted — delta files
-        (O(changed keys) rows, not O(chunk)). The commit then publishes
-        files + offsets atomically (two-phase: write_delta_files ->
-        commit_delta), so a crash between the phases leaves only an
-        orphaned, never-referenced data dir."""
-        from pyspark.sql import Observation
-
+    def _write_chunk(
+        self, chunk: DataFrame, snap: Any
+    ) -> tuple[T.StructType, dict[str, list[str]], dict[str, Any]]:
+        """Validate, dedup and write one chunk's delta files — written, NOT
+        committed: ``apply_chunk`` commits them, ``stage_chunk`` stages
+        them. The chunk is scanned exactly once: validation counters and
+        the offset watermark ride the write job as an ``Observation`` (zero
+        extra scan, zero extra job). Returns the delta schema, the new
+        files per bucket and the observed counters."""
         tagged = chunk.withColumn("_reason", self._reason(chunk))
         ok = F.col("_reason").isNull()
         obs = Observation()
@@ -615,7 +524,7 @@ class CdcApplier:
         # table's buckets use the same murmur3 hash (co_partitioned_write_ok)
         # the winners are ALREADY clustered by bucket and the write skips
         # its repartition — one full-payload shuffle per chunk, not two
-        commit_dir, new_files = self.target.write_delta_files(
+        _, new_files = self.target.write_delta_files(
             winners, sort_cols=self.keys,
             # patch chunks union two branches (full-write winners + patch
             # rows) — partitioning is not the single clean aggregate
@@ -623,133 +532,89 @@ class CdcApplier:
             pre_partitioned=(self.merge_engine != "partial_update"
                              and self.target.co_partitioned_write_ok(self.keys)),
         )
-        m = obs.get  # populated by the write action above
-        tp = _phase("winners_write", t0)
-        stats.n_events = int(m["n_events"] or 0)
-        stats.n_upserts = int(m["n_upserts"] or 0)
-        stats.n_deletes = int(m["n_deletes"] or 0)
-        stats.n_quarantined = int(m["n_quarantined"] or 0)
+        return winners.schema, new_files, obs.get  # populated by the write
 
-        if not new_files:
-            # nothing valid in the chunk — still advance the offset so the
-            # chunk is never replayed (metadata-only commit)
-            if stats.n_quarantined:
-                self._write_quarantine(self._split(chunk)[1], batch_id)
-            self.target.commit_summary(
-                self._summary(snap, hi, batch_id, {}, epoch),
-                expected_parent=snap.snapshot_id,
-            )
-            stats.duration_ms = int((time.monotonic() - t0) * 1000)
-            return stats
-
-        affected = sorted(int(b) for b in new_files)
-        stats.affected_buckets = affected
-        if hi is None:  # streaming: offsets derived from the batch itself
-            hi = int(m["max_lsn"])
-            stats.hi = hi
-
-        # per-bucket stats from parquet footers (driver-side, ~1 ms/file —
-        # no Spark job, no scan): row counts, exact lsn/ts min/max, and the
-        # delete count via the _del null-count trick
-        per_bucket = self.target.file_stats(new_files)
-        tp = _phase("bucket_stats", tp)
-        # Footer stats cover WINNER rows only; LWW orders by (ts, lsn), so a
-        # high-lsn/older-ts loser can leave the footer max below the lsn
-        # actually consumed. per_partition is therefore informational (it is
-        # max-merged in _summary and must never drive resume — last_lsn is
-        # the checkpoint). Absent footer stats fall back to the chunk hi.
-        per_part = {
-            b: int(st["max_lsn"]) if st["max_lsn"] is not None else int(hi)
-            for b, st in per_bucket.items()
-        }
+    @staticmethod
+    def _partition_watermarks(
+        per_bucket: dict[str, dict[str, Any]], hi: int
+    ) -> dict[str, int]:
+        """Per-bucket offset watermarks from the written files' footers.
+        Footer stats cover WINNER rows only; LWW orders by (ts, lsn), so a
+        high-lsn/older-ts loser can leave the footer max below the lsn
+        actually consumed. per_partition is therefore informational (it is
+        max-merged in _summary and must never drive resume — last_lsn is
+        the checkpoint). Absent footer stats fall back to the chunk hi."""
         if any(st["max_lsn"] is None for st in per_bucket.values()):
             print(
                 "[cdc] warning: parquet footer lsn stats missing for some "
                 "buckets; per-partition watermarks fell back to chunk hi",
                 file=sys.stderr,
             )
-        summary = self._summary(snap, hi, batch_id, per_part, epoch)
+        return {
+            b: int(st["max_lsn"]) if st["max_lsn"] is not None else int(hi)
+            for b, st in per_bucket.items()
+        }
 
-        # Quarantine is written BEFORE the offset-advancing commit: a crash
-        # between the two re-applies the chunk (idempotent) instead of
-        # silently losing the rejected rows (the reverse order would skip
-        # the chunk on replay and the quarantined events would be gone).
-        if stats.n_quarantined:
-            self._write_quarantine(self._split(chunk)[1], batch_id)
-            tp = _phase("quarantine", tp)
+    @staticmethod
+    def _lineage_rows(
+        batch_id: int,
+        per_bucket: dict[str, dict[str, Any]],
+        status: str,
+        n_quarantined: int = 0,
+        duration_ms: int = 0,
+    ) -> list[dict]:
+        """One lineage row per written bucket, from its files' footer
+        stats: winner-level counts (rows materialized per bucket);
+        chunk-level event counts live in the metrics table. The batch's
+        quarantine count and duration ride row 0. A batch that wrote no
+        bucket gets a single row with ``source_partition=-1``."""
+        items = sorted(per_bucket.items(), key=lambda kv: int(kv[0]))
+        return [
+            {
+                "batch_id": batch_id,
+                "source_partition": int(b),
+                "n_events": st["n_rows"],
+                "n_upserts": st["n_rows"] - st["n_deletes"],
+                "n_deletes": st["n_deletes"],
+                "n_quarantined": n_quarantined if i == 0 else 0,
+                "min_lsn": st["min_lsn"],
+                "max_lsn": st["max_lsn"],
+                "min_ts": st["min_ts"],
+                "max_ts": st["max_ts"],
+                "status": status,
+                "duration_ms": duration_ms if i == 0 else 0,
+            }
+            for i, (b, st) in enumerate(items or [(-1, _NO_FILES)])
+        ]
 
-        new_snap = self.target.commit_delta(
-            new_files, winners.schema, summary, expected_parent=snap.snapshot_id
+    def _record_lineage(self, rows: list[dict], defer: bool = False) -> None:
+        """Append lineage rows as one commit, or buffer them for
+        :meth:`flush_lineage` — replay batches many chunks' rows into ONE
+        lineage commit (a per-chunk Spark job over a handful of rows is
+        pure fixed overhead: it scales with chunk count, not data)."""
+        if not self.with_lineage or self.lineage is None:
+            return
+        if defer:
+            self._lineage_buf.extend(rows)
+            return
+        self.lineage.append(
+            self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
+            summary={"batch_id": rows[-1]["batch_id"]},
         )
-        stats.snapshot_id = new_snap.snapshot_id
-        stats.duration_ms = int((time.monotonic() - t0) * 1000)
-
-        if self.with_lineage and self.lineage is not None:
-            rows = [
-                {
-                    "batch_id": batch_id,
-                    "source_partition": int(b),
-                    # winner-level counts (rows materialized per bucket);
-                    # chunk-level event counts live in the metrics table.
-                    # Global quarantine count rides row 0.
-                    "n_events": st["n_rows"],
-                    "n_upserts": st["n_rows"] - st["n_deletes"],
-                    "n_deletes": st["n_deletes"],
-                    "n_quarantined": stats.n_quarantined if i == 0 else 0,
-                    "min_lsn": st["min_lsn"],
-                    "max_lsn": st["max_lsn"],
-                    "min_ts": st["min_ts"],
-                    "max_ts": st["max_ts"],
-                    "status": "ok",
-                    "duration_ms": stats.duration_ms if i == 0 else 0,
-                }
-                for i, (b, st) in enumerate(sorted(per_bucket.items(), key=lambda kv: int(kv[0])))
-            ]
-            if defer_lineage:
-                self._lineage_buf.extend(rows)
-            else:
-                self.lineage.append(
-                    self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                    summary={"batch_id": batch_id},
-                )
-            _phase("lineage", tp)
-        if self.metrics is not None:
-            self._metrics_buf.append(
-                {
-                    "batch_id": batch_id,
-                    "epoch": epoch,
-                    "hi_lsn": hi,
-                    "n_events": stats.n_events,
-                    "n_upserts": stats.n_upserts,
-                    "n_deletes": stats.n_deletes,
-                    "n_quarantined": stats.n_quarantined,
-                    "n_winner_rows": sum(st["n_rows"] for st in per_bucket.values()),
-                    "n_affected_buckets": len(affected),
-                    "duration_ms": stats.duration_ms,
-                }
-            )
-            if not defer_lineage:
-                self.flush_metrics()
-        return stats
 
     def flush_lineage(self) -> None:
         """Write any buffered lineage + metrics rows, one append commit
         each (a per-chunk Spark job over a handful of rows would be pure
         fixed overhead)."""
-        if self._lineage_buf and self.lineage is not None:
-            rows, self._lineage_buf = self._lineage_buf, []
-            self.lineage.append(
-                self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                summary={"batch_id": rows[-1]["batch_id"]},
-            )
+        rows, self._lineage_buf = self._lineage_buf, []
+        if rows:
+            self._record_lineage(rows)
         self.flush_metrics()
 
     def flush_metrics(self) -> None:
         """Write any buffered batch-level metrics rows as one commit."""
         if not self._metrics_buf or self.metrics is None:
             return
-        from .schemas import METRICS_SCHEMA
-
         rows, self._metrics_buf = self._metrics_buf, []
         self.metrics.append(
             self.spark.createDataFrame(rows, METRICS_SCHEMA),
@@ -767,7 +632,7 @@ class CdcApplier:
         prev = prev_snap.summary.get("offsets", {})
         # max-merge so per-bucket watermarks never move backwards across
         # chunks (footer-derived values reflect winner rows, not every
-        # consumed event — see _apply_chunk_mor). Informational only;
+        # consumed event — see _partition_watermarks). Informational only;
         # resume is driven exclusively by last_lsn.
         merged_pp = dict(prev.get("per_partition", {}))
         for b, v in per_partition.items():
@@ -953,62 +818,25 @@ class CdcApplier:
         Reference analogue: files wait in wip/ until the checker passes
         before moving into the indexed hierarchy; here the "move" is one
         atomic snapshot flip over audited bytes."""
-        from pyspark.sql import Observation
-
         if self.mode != "mor":
             raise ValueError("stage_chunk requires mode='mor' (delta staging)")
         snap = self.target.snapshot()
         if batch_id is None:
             batch_id = int(snap.summary.get("batch_id", -1)) + 1
-        if epoch is not None:  # streaming: redelivered micro-batch -> no-op
-            if epoch <= snap.summary.get("epoch", -1):
-                return {"wap_id": wap_id, "skipped": True}
-        else:
-            committed = self.committed_lsn()
-            if committed is not None and hi is not None and hi <= committed:
-                return {"wap_id": wap_id, "skipped": True}
+        if self._already_committed(snap, hi, epoch):
+            return {"wap_id": wap_id, "skipped": True}
 
-        tagged = chunk.withColumn("_reason", self._reason(chunk))
-        ok = F.col("_reason").isNull()
-        obs = Observation()
-        tagged = tagged.observe(
-            obs,
-            F.sum(ok.cast("long")).alias("n_events"),
-            F.sum((~ok).cast("long")).alias("n_quarantined"),
-            F.max(F.when(ok, F.col("lsn"))).alias("max_lsn"),
-        )
-        valid = tagged.where(F.col("_reason").isNull()).drop("_reason")
-        winners = self._chunk_rows(valid)
-        existing = [f.name for f in snap.schema.fields]
-        cols = (
-            [c for c in existing if c in winners.columns]
-            + [c for c in winners.columns if c not in existing and c != "op"]
-            + ["op"]
-        )
-        winners = winners.select(cols).withColumn(
-            "_del", F.when(F.col("op") == "D", F.lit(1))
-        )
-        _, new_files = self.target.write_delta_files(
-            winners, sort_cols=self.keys,
-            # patch chunks union two branches (full-write winners + patch
-            # rows) — partitioning is not the single clean aggregate
-            # output the fast path asserts
-            pre_partitioned=(self.merge_engine != "partial_update"
-                             and self.target.co_partitioned_write_ok(self.keys)),
-        )
-        m = obs.get  # populated by the write action above
+        schema, new_files, m = self._write_chunk(chunk, snap)
         if hi is None and m["max_lsn"] is not None:
             hi = int(m["max_lsn"])
         per_bucket = self.target.file_stats(new_files)
-        per_part = {
-            b: int(st["max_lsn"]) if st["max_lsn"] is not None else int(hi)
-            for b, st in per_bucket.items()
-            if st["max_lsn"] is not None or hi is not None
-        }
-        summary = self._summary(snap, hi, batch_id, per_part, epoch)
-        if int(m["n_quarantined"] or 0):
+        summary = self._summary(
+            snap, hi, batch_id, self._partition_watermarks(per_bucket, hi), epoch
+        )
+        n_quarantined = int(m["n_quarantined"] or 0)
+        if n_quarantined:
             self._write_quarantine(self._split(chunk)[1], batch_id)
-        man = self.target.stage_files(new_files, winners.schema, wap_id, summary)
+        man = self.target.stage_files(new_files, schema, wap_id, summary)
         return {
             "wap_id": wap_id,
             "skipped": False,
@@ -1016,7 +844,7 @@ class CdcApplier:
             "batch_id": batch_id,
             "hi": hi,
             "n_events": int(m["n_events"] or 0),
-            "n_quarantined": int(m["n_quarantined"] or 0),
+            "n_quarantined": n_quarantined,
             "staged_files": sum(len(fs) for fs in new_files.values()),
         }
 
@@ -1048,27 +876,9 @@ class CdcApplier:
         )
         snap = self.target.publish_staged(wap_id)
         batch_id = int(man.get("summary", {}).get("batch_id", -1))
-        if self.with_lineage and self.lineage is not None and per_bucket:
-            rows = [
-                {
-                    "batch_id": batch_id,
-                    "source_partition": int(b),
-                    "n_events": st["n_rows"],
-                    "n_upserts": st["n_rows"] - st["n_deletes"],
-                    "n_deletes": st["n_deletes"],
-                    "n_quarantined": 0,
-                    "min_lsn": st["min_lsn"],
-                    "max_lsn": st["max_lsn"],
-                    "min_ts": st["min_ts"],
-                    "max_ts": st["max_ts"],
-                    "status": "wap_published",
-                    "duration_ms": 0,
-                }
-                for b, st in sorted(per_bucket.items(), key=lambda kv: int(kv[0]))
-            ]
-            self.lineage.append(
-                self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                summary={"batch_id": batch_id},
+        if per_bucket:
+            self._record_lineage(
+                self._lineage_rows(batch_id, per_bucket, "wap_published")
             )
         return snap.snapshot_id
 
@@ -1080,21 +890,7 @@ class CdcApplier:
         man = self.target.staged_manifest(wap_id)
         n = self.target.abandon_staged(wap_id)
         batch_id = int(man.get("summary", {}).get("batch_id", -1))
-        if self.with_lineage and self.lineage is not None:
-            row = [{
-                "batch_id": batch_id,
-                "source_partition": -1,
-                "n_events": 0, "n_upserts": 0, "n_deletes": 0,
-                "n_quarantined": 0,
-                "min_lsn": None, "max_lsn": None,
-                "min_ts": None, "max_ts": None,
-                "status": "wap_abandoned",
-                "duration_ms": 0,
-            }]
-            self.lineage.append(
-                self.spark.createDataFrame(row, LINEAGE_SCHEMA),
-                summary={"batch_id": batch_id},
-            )
+        self._record_lineage(self._lineage_rows(batch_id, {}, "wap_abandoned"))
         return n
 
     # ---------------------------------------------------------------- replay
@@ -1147,9 +943,7 @@ class CdcApplier:
             )
             self.maybe_compact()
         if compact_at_end:
-            tc = time.monotonic()
             self.target.compact()
-            _phase("compact_end", tc)
         self.flush_lineage()
         return out
 
@@ -1186,6 +980,4 @@ class CdcApplier:
             if len(fs) >= self.compact_threshold
         ]
         if hot:
-            tc = time.monotonic()
             self.target.compact(buckets=hot)
-            _phase("compact_auto", tc)

@@ -22,7 +22,8 @@ a table directory under the root):
   [WHEN MATCHED THEN UPDATE SET * | SET c = expr, ...]
   [WHEN NOT MATCHED THEN INSERT *]`` — source/target aliases are
   rewritten to the API's ``s``/``t``; omitting the INSERT clause gives
-  an update-only merge.
+  an update-only merge. A DELETE clause requires the UPDATE clause
+  (a MERGE without one is refused).
 * ``UPDATE lake.t SET c = expr, ... WHERE <cond>`` — bare column names
   in the SET expressions resolve to the current row (SQL UPDATE
   semantics; the matched row is also available as ``s``).
@@ -299,6 +300,15 @@ class LakeSQL:
             raise ValueError(
                 f"unparsed MERGE clause near: "
                 f"{m.group('whens')[consumed:consumed + 60]!r}"
+            )
+        if delete_when is not None and update_set is None:
+            # merge_into has no "leave matched rows as they are": without
+            # an UPDATE clause the rows the DELETE condition spares would
+            # be overwritten with the source payload
+            raise ValueError(
+                "MERGE with WHEN MATCHED ... THEN DELETE needs a "
+                "WHEN MATCHED THEN UPDATE clause too (unsupported: "
+                "DELETE without UPDATE)"
             )
         return table.merge_into(
             source,

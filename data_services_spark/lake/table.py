@@ -3583,6 +3583,9 @@ class LakeTable:
             cpath = os.path.join(data_root, cdir)
             if not os.path.isdir(cpath):
                 continue
+            # the dir's age as the writer left it: removing its markers
+            # below resets its mtime to now
+            dir_mtime = os.path.getmtime(cpath)
             entries = [
                 (os.path.join(dp, fn), fn)
                 for dp, _, fs in os.walk(cpath)
@@ -3606,7 +3609,7 @@ class LakeTable:
             # same age margin for file-less commit dirs: a concurrent
             # writer's just-created phase-1 dir is empty until its first
             # parquet lands, so only dirs older than the cutoff are debris
-            if os.path.getmtime(cpath) <= cutoff and not any(
+            if dir_mtime <= cutoff and not any(
                 fs for _, _, fs in os.walk(cpath)
             ):
                 shutil.rmtree(cpath)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from data_services_spark.cdc.apply import CdcApplier
 from data_services_spark.cdc.generator import generate_changes
 from data_services_spark.cdc.oracle import expected_final_state, table_state_matches
+from data_services_spark.lake import export as export_mod
 from data_services_spark.lake.export import (
     export_delta_log,
     export_snapshot_parquet,
@@ -129,3 +130,40 @@ def test_snapshot_parquet_export(spark, lake, tmp_path):
     eng = applier.target.read().toPandas()
     ok, msg = table_state_matches(got, eng)
     assert ok, msg
+
+
+def test_delta_log_version_claim_is_atomic(spark, tmp_path, monkeypatch):
+    """Two exporters racing for the same version: the loser must fail and
+    leave the winner's version file untouched. The race is simulated by a
+    second export that still sees the pre-race log (an empty listing) and
+    whose existence probe of the version file answers False — the window
+    between a check and a rename."""
+    from pyspark.sql import types as T
+
+    from data_services_spark.lake.table import LakeTable
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType(), False),
+        T.StructField("lsn", T.LongType(), True),
+    ])
+    table = LakeTable.create(spark, str(tmp_path / "t"), schema, ["k"], 2)
+    table.append(spark.createDataFrame([("a", 1), ("b", 2)], schema))
+    first = export_delta_log(table)
+    assert first["version"] == 0
+    v0 = os.path.join(first["log_dir"], f"{0:020d}.json")
+    with open(v0, "rb") as f:
+        before = f.read()
+
+    real_exists = os.path.exists
+    monkeypatch.setattr(export_mod, "_log_versions", lambda log_dir: [])
+    monkeypatch.setattr(
+        export_mod.os.path, "exists",
+        lambda p: False if "_delta_log" in os.fspath(p) else real_exists(p),
+    )
+    with pytest.raises(FileExistsError, match="version 0 already exists"):
+        export_delta_log(table)
+    monkeypatch.undo()
+
+    with open(v0, "rb") as f:
+        assert f.read() == before
+    assert sorted(os.listdir(first["log_dir"])) == [f"{0:020d}.json"]

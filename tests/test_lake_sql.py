@@ -102,6 +102,27 @@ def test_merge_subquery_source_update_only(lsql):
     assert _state(lsql)["a"] == ("x", 1000)
 
 
+def test_merge_delete_without_update_is_refused(spark, lsql):
+    """SQL MERGE leaves matched rows the DELETE condition spares
+    unchanged; merge_into cannot, so the shape must fail loudly instead of
+    overwriting those rows (and bumping their lsn) as an UPDATE SET *."""
+    spark.createDataFrame(
+        [("b", "yy", 20, 9), ("c", "drop", 0, 9), ("d", "new", 4, 9)], SCHEMA
+    ).createOrReplaceTempView("changes")
+    before = {r["k"]: r.asDict() for r in lsql.sql("SELECT * FROM lake.t").collect()}
+    with pytest.raises(ValueError, match="WHEN MATCHED THEN UPDATE"):
+        lsql.sql(
+            """
+            MERGE INTO lake.t AS tgt USING changes AS src
+            ON src.k = tgt.k
+            WHEN MATCHED AND src.v = 'drop' THEN DELETE
+            WHEN NOT MATCHED THEN INSERT *
+            """
+        )
+    after = {r["k"]: r.asDict() for r in lsql.sql("SELECT * FROM lake.t").collect()}
+    assert after == before
+
+
 def test_strict_failures(lsql):
     with pytest.raises(ValueError, match="merge keys"):
         lsql.sql(

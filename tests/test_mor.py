@@ -235,3 +235,31 @@ def test_crash_between_delta_write_and_commit_is_invisible(spark, changes_path, 
     assert not os.path.isdir(orphan_dir)
     # and the sweep broke nothing
     assert a.target.read().count() > 0
+
+
+def test_orphan_sweep_removes_the_dir_it_empties(spark, changes_path, tmp_path):
+    """An orphan commit dir older than the margin goes in the same sweep
+    that removes its files: removing its job markers resets the dir's
+    mtime to now, so the age check must use the mtime the writer left."""
+    import os
+    import time
+
+    a = CdcApplier.bootstrap(spark, str(tmp_path / "lake"), bucket_count=4)
+    chunk = spark.read.parquet(changes_path).where(F.col("lsn") <= 999)
+    a.apply_chunk(chunk, -1, 999, batch_id=0)
+    rows_before = a.target.read().count()
+
+    winners = chunk.where(F.col("conv_id").isNotNull()).dropDuplicates(a.keys)
+    orphan_dir, _ = a.target.write_delta_files(
+        winners.withColumn("op", F.lit(None).cast("string")), sort_cols=a.keys
+    )
+    old = time.time() - 7200
+    for dp, _, fs in os.walk(orphan_dir, topdown=False):
+        for fn in fs:
+            os.utime(os.path.join(dp, fn), (old, old))
+        os.utime(dp, (old, old))
+
+    removed = a.target.remove_orphan_files(older_than_sec=3600)
+    assert removed, "orphan files not detected"
+    assert not os.path.isdir(orphan_dir)
+    assert a.target.read().count() == rows_before

@@ -19,6 +19,10 @@ from data_services_spark.queries import REGISTRY
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Spark jobs one all-valid chunk's write runs (validation, LWW dedup and the
+# bucketed delta write, with its counters riding the write as an Observation)
+APPLY_CHUNK_JOBS = 2
+
 
 def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -251,3 +255,41 @@ def test_scd2_batch_single_exchange_shared_window(spark):
     n_windows = len(re.findall(r"\(\d+\) Window\b", plan))
     assert n_windows == 1, plan
     assert "Join" not in plan
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_apply_and_stage_share_one_chunk_write(spark, tmp_path):
+    """apply_chunk (merge-on-read) and stage_chunk write a chunk through
+    the same step: on one all-valid chunk both run the same number of
+    Spark jobs, and that number is pinned — a regression that adds a scan
+    or a job to the shared write fails here. Lineage is deferred, so the
+    count is the chunk write alone."""
+    from data_services_spark.cdc.apply import CdcApplier
+    from data_services_spark.cdc.generator import generate_changes
+
+    chunk = generate_changes(
+        spark, 3000, n_convs=80, max_turns=10, invalid_one_in=0, seed=17
+    )
+    hi = chunk.agg(F.max("lsn")).collect()[0][0]
+    applier = CdcApplier.bootstrap(spark, str(tmp_path / "a"), bucket_count=4)
+    stager = CdcApplier.bootstrap(spark, str(tmp_path / "s"), bucket_count=4)
+    n_apply = _spark_jobs(spark, lambda: applier.apply_chunk(
+        chunk, -1, hi, batch_id=0, defer_lineage=True
+    ))
+    n_stage = _spark_jobs(spark, lambda: stager.stage_chunk(chunk, "w", hi=hi))
+    assert n_apply == n_stage == APPLY_CHUNK_JOBS, (n_apply, n_stage)

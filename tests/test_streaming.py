@@ -3,6 +3,9 @@ restarts, windowed rates, custom stateful turn tracker."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_services_spark.cdc.apply import CdcApplier
@@ -317,3 +320,23 @@ def test_stream_restart_with_evolved_schema(spark, tmp_path):
         .count()
         == 0
     )
+
+
+@pytest.mark.parametrize("sources", [
+    ["--source-dir", "SRC", "--bus-transport", "file"],  # both
+    [],                                                  # neither
+])
+def test_stream_job_rejects_source_flags_before_side_effects(
+    spark, tmp_path, sources
+):
+    """The exactly-one-source check runs before the session and the lake
+    bootstrap: a misinvoked CLI exits and leaves nothing under --root."""
+    from data_services_spark.jobs import stream_job
+
+    root = tmp_path / "lake"
+    argv = ["--root", str(root), "--checkpoint", str(tmp_path / "ckpt")]
+    argv += [str(tmp_path / "src") if a == "SRC" else a for a in sources]
+    with pytest.raises(SystemExit) as exc:
+        stream_job.main(argv)
+    assert exc.value.code == 2
+    assert not os.path.exists(root) or not os.listdir(root)
